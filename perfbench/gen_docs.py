@@ -17,6 +17,7 @@ import numpy as np
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 QUALITY_MIN = 0.3
+WORDS_PER_DOC = 90  # a document has WORDS_PER_DOC - 20 to WORDS_PER_DOC + 19 words
 _WS = re.compile(r"\s+")
 
 
@@ -65,15 +66,14 @@ class Shard:
 
 
 class CorpusGenerator:
-    def __init__(self, seed: int, docs_per_shard: int, words_per_doc: int = 90):
+    def __init__(self, seed: int, docs_per_shard: int):
         self.rng = np.random.default_rng(seed)
         self.vocab = _vocab(self.rng, 6000)
         self.docs_per_shard = docs_per_shard
-        self.words = words_per_doc
         self.next_id = 0
 
     def _text(self) -> list[str]:
-        n = int(self.rng.integers(self.words - 20, self.words + 20))
+        n = int(self.rng.integers(WORDS_PER_DOC - 20, WORDS_PER_DOC + 20))
         toks = self.vocab[self.rng.integers(0, len(self.vocab), n)]
         stops = np.array(STOPWORDS)[self.rng.integers(0, len(STOPWORDS), n)]
         return np.where(self.rng.random(n) < 0.25, stops, toks).tolist()

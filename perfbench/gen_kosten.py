@@ -19,6 +19,11 @@ from dataclasses import dataclass, field
 KEY = "Kostenstelle"
 COMPARE = ("Bezeichnung", "Bereich")
 HEADER = (KEY,) + COMPARE
+# a daily batch, as fractions of the current key count: changed keys,
+# brand-new keys and unchanged re-sends; DUP_FRAC is the share of batch
+# rows repeated verbatim (identical intra-batch duplicates)
+DAILY_CHANGE, DAILY_NEW, DAILY_RESEND = 0.045, 0.01, 0.005
+DUP_FRAC = 0.02
 
 BEREICHE = (
     "Vertrieb", "Produktion", "Verwaltung", "Forschung", "Logistik",
@@ -162,27 +167,11 @@ class Batch:
 
 
 class KostenGenerator:
-    """Seeded daily batches over a dimension of ``n_keys`` keys.
+    """Seeded daily batches over a dimension of ``n_keys`` keys."""
 
-    ``change_frac`` / ``new_frac`` / ``resend_frac`` are fractions of the
-    current key count; ``dup_frac`` is the share of batch rows repeated
-    verbatim (identical intra-batch duplicates)."""
-
-    def __init__(
-        self,
-        seed: int,
-        n_keys: int,
-        change_frac: float = 0.045,
-        new_frac: float = 0.01,
-        resend_frac: float = 0.005,
-        dup_frac: float = 0.02,
-    ):
+    def __init__(self, seed: int, n_keys: int):
         self.rng = random.Random(seed)
         self.n_keys = n_keys
-        self.change_frac = change_frac
-        self.new_frac = new_frac
-        self.resend_frac = resend_frac
-        self.dup_frac = dup_frac
         self.state: dict[str, tuple[str | None, str | None]] = {}
         self.next_key = 0
 
@@ -214,8 +203,8 @@ class KostenGenerator:
         return latest
 
     def daily(self) -> Batch:
-        latest = self.snapshot(self.change_frac, self.new_frac, self.resend_frac)
+        latest = self.snapshot(DAILY_CHANGE, DAILY_NEW, DAILY_RESEND)
         rows = [(k, *v) for k, v in latest.items()]
-        rows += self.rng.sample(rows, int(len(rows) * self.dup_frac))
+        rows += self.rng.sample(rows, int(len(rows) * DUP_FRAC))
         self.rng.shuffle(rows)
         return Batch(to_csv(rows, self.rng), len(rows), latest)

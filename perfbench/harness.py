@@ -49,7 +49,7 @@ def driver_heap() -> str:
     return f"{max(1, min(6, int(gib / 4)))}g"
 
 
-def start_session(run_dir: Path, cpus: int):
+def start_session(run_dir: Path, cpus: int, jvm_opts: str):
     from lakehouse_poc_spark.session import get_spark
 
     tmp = run_dir / "tmp"
@@ -59,7 +59,7 @@ def start_session(run_dir: Path, cpus: int):
         "spark.ui.showConsoleProgress": "false",
         "spark.local.dir": str(run_dir / "spark-local"),
         "spark.sql.warehouse.dir": str(run_dir / "spark-warehouse"),
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData {jvm_opts}".strip(),
         "spark.ui.retainedJobs": "20000",
         "spark.ui.retainedStages": "40000",
     }
@@ -105,7 +105,6 @@ class Harness:
         self.measuring = False
         self.round_traced = False
         self.phases: dict[str, float] = {}
-        self.steal_share = 0.0
 
     @contextmanager
     def phase(self, name: str):
@@ -153,7 +152,6 @@ class Harness:
         rounds alternate untraced/traced and at least two run."""
         self.measuring = True
         min_rounds = 2 if self.trace else 1
-        cpu0 = metrics.cpu_times()
         t0 = time.perf_counter()
         r = 0
         while r < min_rounds or time.perf_counter() - t0 < seconds:
@@ -163,11 +161,7 @@ class Harness:
             r += 1
         self.tracer.active = False
         self.measuring = False
-        wall = time.perf_counter() - t0
-        total, steal = (b - a for a, b in zip(cpu0, metrics.cpu_times()))
-        # time the hypervisor gave to other guests: explains slow runs
-        self.steal_share = steal / total if total else 0.0
-        return wall
+        return time.perf_counter() - t0
 
     def untraced_ops(self) -> list[OpRecord]:
         return [o for o in self.ops if not o.traced]

@@ -62,13 +62,6 @@ def vm_hwm_mb(pid: int | str = "self") -> float:
     return 0.0
 
 
-def cpu_times() -> tuple[int, int]:
-    """(total, steal) jiffies over all CPUs from /proc/stat."""
-    with open("/proc/stat") as f:
-        fields = [int(x) for x in f.readline().split()[1:]]
-    return sum(fields), fields[7] if len(fields) > 7 else 0
-
-
 def mem_total_bytes() -> int:
     with open("/proc/meminfo") as f:
         for line in f:

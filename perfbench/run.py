@@ -61,7 +61,7 @@ def main(argv=None) -> int:
         with ThreadPoolExecutor(1) as pool:
             # pure-Python input generation overlaps the JVM start
             prepared = pool.submit(workload.prepare, run_dir)
-            spark = harness.start_session(run_dir, metrics.cpu_count())
+            spark = harness.start_session(run_dir, metrics.cpu_count(), workload.jvm_opts)
             t_session = time.perf_counter() - t0
             prepared.result()
         t_inputs = time.perf_counter() - t0 - t_session

@@ -136,17 +136,13 @@ def covered(intervals, lo: float, hi: float) -> float:
     return total
 
 
-def _wrap(tracer: Tracer, name: str, fn, on_span=None):
+def _wrap(tracer: Tracer, name: str, fn):
     @functools.wraps(fn)
     def traced(*args, **kwargs):
         if not tracer.active:
             return fn(*args, **kwargs)
-        with tracer.span(name) as sp:
-            before = on_span(args, None) if on_span else None
-            out = fn(*args, **kwargs)
-            if on_span:
-                sp.attrs.update(on_span(args, before))
-            return out
+        with tracer.span(name):
+            return fn(*args, **kwargs)
 
     return traced
 
@@ -159,14 +155,22 @@ def _table_files(wh, table: str) -> dict[str, tuple[int, int]]:
     }
 
 
-def _apply_bytes(args, before):
-    """``Warehouse.apply_scd2_changeset`` hook: bytes of data files
-    that are new or rewritten by the call."""
-    wh, table = args[0], args[1]
-    now = _table_files(wh, table)
-    if before is None:
-        return now
-    return {"bytes_written": sum(sz for p, (sz, mt) in now.items() if before.get(p) != (sz, mt))}
+def _wrap_apply_scd2(tracer: Tracer, fn):
+    """``Warehouse.apply_scd2_changeset`` wrapper that also records the
+    bytes of data files the call creates or rewrites."""
+
+    @functools.wraps(fn)
+    def traced(wh, table, *args, **kwargs):
+        if not tracer.active:
+            return fn(wh, table, *args, **kwargs)
+        with tracer.span("warehouse.apply_scd2") as sp:
+            before = _table_files(wh, table)
+            out = fn(wh, table, *args, **kwargs)
+            now = _table_files(wh, table)
+            sp.attrs["bytes_written"] = sum(sz for p, (sz, mt) in now.items() if before.get(p) != (sz, mt))
+            return out
+
+    return traced
 
 
 def patch_engine(tracer: Tracer):
@@ -178,24 +182,26 @@ def patch_engine(tracer: Tracer):
     from lakehouse_poc_spark.streaming import runner
 
     targets = [
-        (readers, "read_csv", "readers.read_csv", None),
-        (pipeline, "read_csv", "readers.read_csv", None),
-        (pipeline, "load_raw", "pipeline.load_raw", None),
-        (scd2, "scd2_merge", "scd2.merge", None),
-        (pipeline, "scd2_merge", "scd2.merge", None),
-        (runner, "scd2_merge", "scd2.merge", None),
-        (runner, "scd2_stream", "runner.scd2_stream", None),
-        (Warehouse, "append", "warehouse.append", None),
-        (Warehouse, "read", "warehouse.read", None),
-        (Warehouse, "overwrite", "warehouse.overwrite", None),
-        (Warehouse, "overwrite_from_plan", "warehouse.overwrite_from_plan", None),
-        (Warehouse, "apply_scd2_changeset", "warehouse.apply_scd2", _apply_bytes),
+        (readers, "read_csv", "readers.read_csv"),
+        (pipeline, "read_csv", "readers.read_csv"),
+        (pipeline, "load_raw", "pipeline.load_raw"),
+        (scd2, "scd2_merge", "scd2.merge"),
+        (pipeline, "scd2_merge", "scd2.merge"),
+        (runner, "scd2_merge", "scd2.merge"),
+        (runner, "scd2_stream", "runner.scd2_stream"),
+        (Warehouse, "append", "warehouse.append"),
+        (Warehouse, "read", "warehouse.read"),
+        (Warehouse, "overwrite", "warehouse.overwrite"),
+        (Warehouse, "overwrite_from_plan", "warehouse.overwrite_from_plan"),
     ]
     saved = []
-    for owner, attr, name, hook in targets:
+    for owner, attr, name in targets:
         fn = owner.__dict__[attr]
         saved.append((owner, attr, fn))
-        setattr(owner, attr, _wrap(tracer, name, fn, hook))
+        setattr(owner, attr, _wrap(tracer, name, fn))
+    fn = Warehouse.__dict__["apply_scd2_changeset"]
+    saved.append((Warehouse, "apply_scd2_changeset", fn))
+    Warehouse.apply_scd2_changeset = _wrap_apply_scd2(tracer, fn)
 
     def restore() -> None:
         for owner, attr, fn in reversed(saved):

@@ -36,10 +36,10 @@ QUERIES = (
 LARGE = {"asof_events_orders"}
 LINEITEM_ROWS = 240_000
 WARMUP_LINEITEM_ROWS = 3_000
-DOCS_PER_SHARD = 3_000
-N_SHARDS = 2
+DOCS_PER_SHARD = 2_000
+N_SHARDS = 3
 WARMUP_DOCS = 200
-SHARD_AFTER = (6,)
+SHARD_AFTER = (4, 8, 12)
 WARMUP_THREADS = 3
 LSH_THRESHOLD = 0.8
 RECALL_FLOOR = 0.95
@@ -72,6 +72,7 @@ def same_frame(got: pd.DataFrame, want: pd.DataFrame) -> tuple[bool, str]:
 
 class StarDedup:
     name = "star_dedup"
+    jvm_opts = ""
 
     def __init__(self, seed: int):
         self.seed = seed
