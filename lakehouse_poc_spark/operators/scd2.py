@@ -10,21 +10,29 @@ notebooks drop effect (b) — treated as a bug, not a spec (reference
 "Mini-ETL-Pipeline in Databricks.py":56-66 vs pipeline_core.py:185-252).
 
 Differences from the reference, by design:
-- ONE action computes the change-set stats (the reference runs 5+
-  ``count()`` jobs re-executing lineage — pipeline_core.py:203,245,
-  256-258); we cache the flagged join once.
+- The merge is ONE pass with NO extra Spark action on the rewrite path
+  (the reference runs 5+ ``count()`` jobs re-executing lineage —
+  pipeline_core.py:203,245,256-258): the stats are an ``Observation``
+  on the rewrite plan, filled while the new dimension is written.
 - Change detection is null-safe ``<=>`` (operators/changes.py).
 - ``run_ts`` is a parameter, not ``current_timestamp()`` — reruns are
   reproducible and validity chains line up exactly.
 - Composite business keys everywhere (the reference hardcodes a single
   key in the DataFrame path, pipeline_core.py:97-101,163-179).
 
-Scale notes: the dim-side join is on the business key; Spark/AQE
-broadcasts the smaller side. The final apply is format-specific: on
-parquet emulation we rewrite the dimension (staged swap); on
-Delta/Iceberg the same change-set feeds a MERGE that rewrites only
-matched files. The change-set computation — the expensive part — is
-identical either way.
+Plan shape: the whole dimension is full-outer-joined with the batch on
+the business key AND the target's open-row flag, so history rows and
+current rows of keys absent from the batch pass through unmatched.
+Each joined row then emits its output through one
+``inline(array(struct))``: the target row as-is, the closed row plus
+the new version (changed key), or the new version alone (new key).
+One shuffle of each side, one scan of the dimension, and the written
+table has at most ``spark.sql.shuffle.partitions`` files however many
+merges ran. On parquet-family warehouses that plan IS the rewrite (a
+staged swap or a manifest commit); on Delta/Iceberg the change-set
+(changed keys, new versions) is sliced lazily from the same join and
+MERGEd in place, rewriting only matched files, with the stats taken
+by one aggregate because the native MERGE never runs the rewrite plan.
 """
 
 from __future__ import annotations
@@ -32,7 +40,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
@@ -56,15 +64,23 @@ class MergeStats:
         }
 
 
-def _stamp(df: DataFrame, cfg: PipelineConfig, run_ts: datetime | str) -> DataFrame:
+#: Formats whose writers run a plan inside their own commands, so an
+#: Observation on it is not relied on; their SCD2 apply MERGEs the
+#: change-set in place and never runs the full-rewrite plan
+#: (Warehouse.apply_scd2_changeset).
+_NATIVE = ("delta", "iceberg")
+#: change flag → MergeStats field
+_FLAGS = (("new", "new_keys"), ("changed", "updated_keys"), ("same", "unchanged"))
+
+
+def _opened(cfg: PipelineConfig, run_ts: datetime | str) -> dict:
+    """Technical columns of a version opened at ``run_ts``."""
     t = cfg.technical
-    return df.withColumns(
-        {
-            t.valid_from: F.lit(run_ts).cast("timestamp"),
-            t.valid_to: F.lit(None).cast("timestamp"),
-            t.is_current: F.lit(True),
-        }
-    )
+    return {
+        t.valid_from: F.lit(run_ts).cast("timestamp"),
+        t.valid_to: F.lit(None).cast("timestamp"),
+        t.is_current: F.lit(True),
+    }
 
 
 def scd2_merge(
@@ -93,9 +109,13 @@ def scd2_merge(
     latest = latest.select(*cfg.wanted_columns)
 
     if not wh.table_exists(cfg.dim_table):
-        init = _stamp(latest, cfg, run_ts)
+        obs = Observation()
+        init = latest.withColumns(_opened(cfg, run_ts)).observe(
+            obs, F.count(F.lit(1)).alias("new_keys")
+        )
         wh.overwrite(init, cfg.dim_table)
-        return MergeStats(unchanged=0, new_keys=init.count(), updated_keys=0)
+        n = init.count() if wh.format in _NATIVE else obs.get["new_keys"]
+        return MergeStats(unchanged=0, new_keys=n, updated_keys=0)
 
     dim = wh.read(cfg.dim_table)
     missing = [c for c in cfg.wanted_columns if c not in dim.columns]
@@ -110,59 +130,64 @@ def scd2_merge(
         dim = dim.withColumns(
             {c: F.lit(None).cast(src_types[c]) for c in missing}
         )
-    current = dim.filter(F.col(t.is_current))
 
-    src = latest.alias("src")
-    tgt = current.alias("tgt")
-    on = [F.col(f"src.{k}") == F.col(f"tgt.{k}") for k in keys]
-    cond = on[0]
-    for c in on[1:]:
-        cond = cond & c
+    # Only open rows can match (is_current is part of the join
+    # condition): history rows and current rows of keys absent from
+    # the batch pass through the full-outer join unmatched.
+    src = latest.withColumn("__in_src", F.lit(True)).alias("src")
+    tgt = dim.withColumn("__in_tgt", F.lit(True)).alias("tgt")
+    cond = F.col(f"tgt.{t.is_current}")
+    for k in keys:
+        cond = cond & (F.col(f"src.{k}") == F.col(f"tgt.{k}"))
+    in_src = F.col("__in_src").isNotNull()
+    matched = in_src & F.col("__in_tgt").isNotNull()
+    change = any_change("src", "tgt", cfg.compare_columns)
+    flagged = src.join(tgt, cond, "full_outer").withColumns(
+        {
+            "__is_new": in_src & ~matched,
+            "__is_changed": matched & change,
+            "__is_same": matched & ~change,
+        }
+    )
+    counts = [F.count_if(f"__is_{flag}").alias(n) for flag, n in _FLAGS]
+    obs = Observation()
+    observed = flagged.observe(obs, *counts)
 
-    flagged = (
-        src.join(tgt, cond, "left")
-        .select(
-            *[F.col(f"src.{c}").alias(c) for c in cfg.wanted_columns],
-            F.col(f"tgt.{t.is_current}").isNull().alias("__is_new"),
-            (
-                F.col(f"tgt.{t.is_current}").isNotNull()
-                & any_change("src", "tgt", cfg.compare_columns)
-            ).alias("__is_changed"),
+    def version(side: str, overrides: dict) -> "F.Column":
+        return F.struct(
+            *[overrides.get(c, F.col(f"{side}.{c}")).alias(c) for c in dim.columns]
         )
-        .cache()
-    )
-    # ONE action for all three stats (vs the reference's 5+ count jobs).
-    counts = flagged.agg(
-        F.sum(F.when(F.col("__is_new"), 1).otherwise(0)).alias("new"),
-        F.sum(F.when(F.col("__is_changed"), 1).otherwise(0)).alias("chg"),
-        F.sum(
-            F.when(~F.col("__is_new") & ~F.col("__is_changed"), 1).otherwise(0)
-        ).alias("same"),
-    ).collect()[0]
 
-    changed_keys = flagged.filter(F.col("__is_changed")).select(*keys)
-    inserts = _stamp(
-        flagged.filter(F.col("__is_new") | F.col("__is_changed")).select(
-            *cfg.wanted_columns
-        ),
-        cfg,
-        run_ts,
+    kept = version("tgt", {})
+    closed = version(
+        "tgt",
+        {t.is_current: F.lit(False), t.valid_to: F.lit(run_ts).cast("timestamp")},
     )
-    closed = (
-        current.join(changed_keys, keys, "left_semi")
-        .withColumns(
-            {
-                t.is_current: F.lit(False),
-                t.valid_to: F.lit(run_ts).cast("timestamp"),
-            }
+    opened = version("src", _opened(cfg, run_ts))
+    new_dim = observed.select(
+        F.inline(
+            F.when(F.col("__is_new"), F.array(opened))
+            .when(F.col("__is_changed"), F.array(closed, opened))
+            .otherwise(F.array(kept))
         )
     )
-    kept_current = current.join(changed_keys, keys, "left_anti")
-    history = dim.filter(~F.col(t.is_current))
 
-    new_dim = history.unionByName(kept_current).unionByName(closed).unionByName(inserts)
-    # format-specific apply: parquet rewrites via staged swap; Delta
-    # MERGEs the closes in place and appends the inserts
+    # The change-set as lazy slices of the same join, for formats that
+    # MERGE in place instead of rewriting.
+    changed_keys = flagged.filter("__is_changed").select(
+        *[F.col(f"src.{k}").alias(k) for k in keys]
+    )
+    inserts = (
+        flagged.filter(F.col("__is_new") | F.col("__is_changed"))
+        .select(*[F.col(f"src.{c}").alias(c) for c in cfg.wanted_columns])
+        .withColumns(_opened(cfg, run_ts))
+    )
+    native = wh.format in _NATIVE
+    if native:
+        # native writers run the change-set inside their own MERGE
+        # command, so the rewrite plan (and its observation) never
+        # executes: one aggregate, before the MERGE moves the snapshot
+        stats = flagged.agg(*counts).collect()[0].asDict()
     wh.apply_scd2_changeset(
         cfg.dim_table,
         keys,
@@ -173,12 +198,7 @@ def scd2_merge(
         run_ts,
         new_dim,
     )
-    flagged.unpersist()
-    return MergeStats(
-        unchanged=int(counts["same"] or 0),
-        new_keys=int(counts["new"] or 0),
-        updated_keys=int(counts["chg"] or 0),
-    )
+    return MergeStats(**(stats if native else obs.get))
 
 
 def point_in_time_join(

@@ -6,8 +6,8 @@ O2 multi-table fan-out loop + O3 conditional merge — "Mini-ETL-Pipeline
 in Databricks.py":113-131), with the reference's self-inflicted
 pessimizations fixed by construction (SURVEY.md §4): the raw batch is
 read once (the reference re-reads the source CSV through the returned
-plan), stats come from one cached change-set, and ingest is fully
-distributed (no driver-side bytes).
+plan), stats are observed on the merge's own rewrite, and ingest is
+fully distributed (no driver-side bytes).
 """
 
 from __future__ import annotations
@@ -35,11 +35,17 @@ def load_raw(
     """Land a batch in the append-only raw table (reference S1+K1:
     append, "RAW ist historisch" — pipeline_core.py:62-68). Returns the
     just-landed rows read BACK from the raw table, so downstream
-    transforms consume the landed data, not a re-read of the source."""
+    transforms consume the landed data, not a re-read of the source.
+
+    CSV sources land as strings: an inferred type is a guess about one
+    file (``0815`` reads as int 815), and the next batch's ``KST9``
+    would then no longer fit the raw table's schema."""
     if batch is None:
         if cfg.source_path is None:
             raise ValueError(f"{cfg.name}: no source_path and no batch")
-        batch = read_csv(spark, cfg.source_path, dialect=cfg.dialect)
+        batch = read_csv(
+            spark, cfg.source_path, dialect=cfg.dialect, infer_schema=False
+        )
     stamped = with_ingest_metadata(batch, cfg.ingest_source, run_ts)
     wh.append(stamped, cfg.raw_table)
     return wh.read(cfg.raw_table).filter(
@@ -50,21 +56,22 @@ def load_raw(
 def transform_dim(df_raw: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Raw batch → one clean row per business key (reference
     transform_dim, pipeline_core.py:77-108): project wanted columns,
-    trim strings, keep the latest row per key, distinct.
+    trim strings, keep the latest row per key.
 
     Tie semantics: rows landed in the SAME run share an ingest
-    timestamp; identical-content ties collapse via distinct, but a key
-    appearing twice in one batch with different content has no defined
-    winner (the reference has the same hazard — its row_number orders
-    only by IngestTimestamp). Feed each run only that run's new files
-    (pipeline O3 conditional load) so "latest" is well-defined."""
+    timestamp; ``dedup_latest`` keeps one of them, so identical-content
+    ties collapse to that row, but a key appearing twice in one batch
+    with different content has no defined winner (the reference has the
+    same hazard — its row_number orders only by IngestTimestamp). Feed
+    each run only that run's new files (pipeline O3 conditional load)
+    so "latest" is well-defined."""
     projected = trim_columns(
         df_raw.select(*cfg.wanted_columns, INGEST_TS), cols=None
     )
     latest = dedup_latest(
         projected, keys=list(cfg.business_key), order_by=[INGEST_TS]
     )
-    return latest.select(*cfg.wanted_columns).distinct()
+    return latest.select(*cfg.wanted_columns)
 
 
 def run_pipeline(

@@ -619,11 +619,16 @@ class Warehouse:
         run_ts,
         full_rewrite: DataFrame,
     ) -> None:
-        """Format-specific final step of an SCD2 merge (the change-set
-        itself is computed format-agnostically in operators/scd2.py).
+        """Format-specific final step of an SCD2 merge (the plans are
+        built format-agnostically in operators/scd2.py).
 
-        parquet: staged-swap rewrite of the whole dimension
-        (``full_rewrite`` is the complete new table plan).
+        parquet: ``full_rewrite`` is the complete new table as one
+        single-pass plan over the dimension; it is written through
+        ``overwrite_from_plan`` (staged swap, or a manifest/log commit
+        on the subclasses). ``changed_keys`` and ``inserts`` are not
+        executed. scd2_merge reads its stats from an Observation on
+        ``full_rewrite``, so an override of this method must execute
+        that plan exactly when it writes it.
 
         delta: ``DeltaTable.merge`` closes the changed keys' open rows
         in place (rewriting only the files that hold them — the 100 TB
@@ -960,7 +965,7 @@ class Warehouse:
         ``batch`` must be key-unique (Delta's multiple-source-match
         error is the alternative). Returns
         ``{"deleted": n, "updated": n, "inserted": n}`` computed in
-        ONE action (scd2_merge's single-agg discipline).
+        ONE action (the reference counted each effect separately).
 
         parquet: matched rows (both clauses) leave via one anti-join,
         then updates+inserts append in the same staged-swap rewrite —

@@ -36,6 +36,42 @@ def test_cp1252_semicolon_csv_pipeline(spark, wh, tmp_path):
     assert raw.filter(F.col("IngestSource") == "blob-import").count() == 2
 
 
+def test_csv_lands_as_strings_across_batches(spark, wh, tmp_path):
+    """A numeric-looking key ("0815") must not fix the raw table's
+    column type: the next batch's "KST9" lands in the same string
+    column, and the leading zero survives."""
+    src = tmp_path / "in"
+    src.mkdir()
+
+    def run(name, rows, run_ts):
+        (src / name).write_bytes(
+            ("Kostenstelle;Bezeichnung;Bereich\r\n" + rows).encode("cp1252")
+        )
+        cfg = PipelineConfig(
+            name="kosten",
+            raw_table="l0.kosten_raw",
+            dim_table="l1.dim_kosten",
+            business_key=("Kostenstelle",),
+            compare_columns=("Bezeichnung", "Bereich"),
+            source_path=str(src / name),
+            dialect=CsvDialect(sep=";", encoding="cp1252"),
+        )
+        return run_pipeline(spark, wh, cfg, run_ts)
+
+    assert run("KOSTEN_1.csv", "0815;Büro;Köln\r\n", "2030-01-01 00:00:00").new_keys == 1
+    stats = run(
+        "KOSTEN_2.csv", "KST9;Lager;Nord\r\n0815;Büro;Kiel\r\n", "2030-01-02 00:00:00"
+    )
+    assert stats.as_dict() == {"unchanged": 0, "new_keys": 1, "updated_keys": 1}
+    raw = wh.read("l0.kosten_raw")
+    assert dict(raw.dtypes)["Kostenstelle"] == "string"
+    assert sorted(r.Kostenstelle for r in raw.collect()) == ["0815", "0815", "KST9"]
+    current = wh.read("l1.dim_kosten").filter("is_current").orderBy("Kostenstelle")
+    assert [(r.Kostenstelle, r.Bereich) for r in current.collect()] == [
+        ("0815", "Kiel"), ("KST9", "Nord"),
+    ]
+
+
 def test_csv_glob_and_file_metadata(spark, tmp_path):
     d = tmp_path / "files"
     d.mkdir()

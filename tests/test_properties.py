@@ -51,8 +51,18 @@ def test_scd2_invariants_hold_for_any_batch_sequence(spark, tmp_path_factory, ba
     for i, batch in enumerate(batches):
         df = spark.createDataFrame(list(batch.items()), "k string, v int")
         stats = scd2_merge(wh, CFG, df, run_ts=f"2020-01-{i + 1:02d} 00:00:00")
-        # stats partition the batch exactly
-        assert stats.unchanged + stats.new_keys + stats.updated_keys == len(batch)
+        # stats classify each batch key against the dict model; Python
+        # ``==`` is null-safe here (None == None), like the merge's <=>
+        new = [k for k in batch if k not in expected_current]
+        same = [
+            k for k in batch
+            if k in expected_current and expected_current[k] == batch[k]
+        ]
+        assert stats.as_dict() == {
+            "unchanged": len(same),
+            "new_keys": len(new),
+            "updated_keys": len(batch) - len(new) - len(same),
+        }
         expected_current.update(batch)
 
     dim = wh.read(CFG.dim_table).collect()

@@ -156,6 +156,30 @@ def test_merge_without_pipeline(spark, wh):
     assert dim.filter("IsCurrent").count() == 3
 
 
+def test_repeated_merges_do_not_fragment_the_dimension(spark, wh):
+    """Each merge rewrites the dimension from one shuffle, so its data
+    files stay bounded by the shuffle partition count however many
+    merges ran (a union of per-effect branches would add files every
+    merge)."""
+    def rows(day, n_keys):
+        return [
+            (f"K{i:04d}", f"Name {i}", f"Bereich {(i * (day + 1)) % 7 if i % 10 == 0 else 0}")
+            for i in range(n_keys)
+        ]
+
+    scd2_merge(wh, CFG, batch(spark, rows(0, 2000)), T1)
+    for day in range(1, 7):
+        stats = scd2_merge(
+            wh, CFG, batch(spark, rows(day, 2000 + 20 * day)),
+            f"2030-01-{day + 1:02d} 00:00:00",
+        )
+        assert stats.new_keys == 20 and stats.updated_keys > 0
+    limit = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert 0 < len(wh._data_files(CFG.dim_table)) <= limit
+    dim = wh.read(CFG.dim_table)
+    assert dim.filter(F.col("IsCurrent")).count() == 2120
+
+
 def test_run_many_fanout_and_skip(spark, wh):
     """O2/O3: the config-driven multi-table loop merges every table
     with a batch and skips tables with none (the reference's
